@@ -8,8 +8,9 @@ as Postgres cache tiers become DataFrames; callers persist whichever tiers
 they want as Parquet/Delta tables (sinks/).
 
 At 100TB: every stage is shuffle-bounded by its key (uri or yuid), the
-closure iterates O(component diameter) bounded rounds, and nothing ever
-collects to the driver.
+closure iterates O(component diameter) bounded rounds, and the only
+driver collect is the closure's contracted residue, bounded at
+``closure.DRIVER_FINISH_EDGES`` edges (larger residues stay distributed).
 """
 
 from __future__ import annotations
@@ -33,12 +34,18 @@ def run_build(
     merge_order: dict[str, int] | None = None,
     delta_sized: bool = False,
     materialize: bool = False,
+    idmap_outside: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """records + reconcile indexes (+ prev idmap) -> all output tiers.
 
     ``delta_sized``: this build covers a change-feed-sized slice (the
     incremental rebuild) — size-asymmetric joins against prev-build
     relations broadcast the slice side (see idmap.assign_yuids).
+
+    ``idmap_outside``: (qua_uri, yuid) rows for records NOT in this
+    build (an incremental slice's untouched components).  References to
+    them are rewritten to their yuids, as a full build would; without it
+    only URIs this build labels are rewritten.
 
     Reliability caveat (ADVICE r15): localCheckpoint stores
     non-replicated executor-local blocks with TRUNCATED lineage — on a
@@ -100,8 +107,11 @@ def run_build(
     # EAGER: reidentified has two consumers IN ONE downstream job (the
     # merge fold's exchange and the caller's members aggregation) — see
     # the _m_lazy boundary note
+    resolve = idmap if idmap_outside is None else (
+        idmap.select("qua_uri", "yuid").unionByName(idmap_outside.select("qua_uri", "yuid"))
+    )
     reidentified = _m(reidentify(
-        records.select("source", "identifier", "rectype", "data"), idmap
+        records.select("source", "identifier", "rectype", "data"), resolve, delta_sized
     ))
     # EAGER: merged feeds concurrent extract subtrees in multi-tier
     # consumers (b03's facets+names join in one job)

@@ -1,23 +1,36 @@
 """Connected-components labeling — the equivalence-closure engine.
 
 Replaces the reference's per-record BFS collector + mutable Redis idmap
-unions (collector.py:108-278, reference_manager.py:212-407) with whole-
-dataset iterative label propagation: each node takes the minimum label among
-itself and its neighbors until fixpoint. Convergence is O(max component
-diameter) rounds; entity-equivalence components are small (the reference
-bounds BFS at max_distance=3), so this terminates in a handful of rounds.
+unions (collector.py:108-278, reference_manager.py:212-407) with a
+whole-dataset closure that labels every node with the minimum node id of
+its component, in three steps:
 
-Scale notes (100TB): every round is one shuffle join on the edge list.
-`localCheckpoint` truncates lineage so plans don't grow unboundedly; AQE
-coalesces the shrinking change-set. For pathological long-chain graphs,
-switch to the large-star/small-star algorithm (O(log n) rounds, same
-join primitive) — not needed for equivalence sets with bounded diameter.
+1. **probe** — path-halving label propagation, each round one shuffle
+   join plus a pointer shortcut.  Bounded-diameter equivalence graphs
+   (the common shape: the reference caps BFS at max_distance=3) converge
+   here and stop.
+2. **contract** — a probe that runs out of budget or decays slowly (long
+   chains, giant components) has its edges relabeled by the current
+   labels: converged components collapse to nothing and chains shrink
+   ~2^k-fold, leaving a small quotient-graph residue.
+3. **finish** — a residue of at most ``DRIVER_FINISH_EDGES`` edges is
+   collected and finished by union-find on the driver (one bounded
+   collect instead of ~14 Spark jobs per star round); a larger residue
+   finishes with large-star/small-star (O(log n) rounds of the same join
+   primitive).  Either way the labels are joined back onto the probe's.
+
+`localCheckpoint` truncates lineage so per-round plans stay flat; AQE
+coalesces the shrinking change-set.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Largest contracted residue (edges) finished on the driver rather than
+# by star rounds; a few MB of driver memory at most.
+DRIVER_FINISH_EDGES = 100_000
 
 
 def connected_components(
@@ -34,33 +47,25 @@ def connected_components(
     reachable from it. Returns DataFrame(node, component).
 
     ``edges`` may be directed and contain duplicates/self-loops; it is
-    symmetrized and deduplicated here.  ``stats`` (if given) receives
-    {"rounds": n, "algorithm": name} so tests can pin the O(log n)
-    convergence claim and the routing decision.
+    symmetrized and deduplicated here, and edges with a null endpoint are
+    dropped.  ``stats`` (if given) receives {"rounds", "algorithm",
+    "residue_edges"}, where ``algorithm`` names the step that produced
+    the final labels: "halving", "driver" or "star".
 
     ``algorithm``: 'halving' is label propagation with pointer
     shortcutting — right for equivalence graphs whose components have
-    bounded diameter (the reference caps BFS at max_distance=3).  'star'
-    is large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond"), whose per-round work is proportional to the
-    CURRENT edge set rather than the full label relation — faster on
-    pathological graphs (very long chains, giant components) where
-    propagation's every-round full-label join becomes the bottleneck
-    (measured: star 1.11-1.21x faster once 5,000-link chains appear,
-    SCALE.md round 10).
+    bounded diameter.  'star' is large-star/small-star (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond"), whose per-round work
+    is proportional to the CURRENT edge set rather than the full label
+    relation (SCALE.md round 10).
 
-    'auto' (default — VERDICT r10 #6) removes the human from the choice:
-    run halving, and if it either exhausts ``auto_halving_budget`` rounds
-    or its changed-label count decays slower than
-    ``auto_decay_threshold`` round-over-round (the long-chain signature:
-    every round still relabels ~n nodes), restart with star on the
-    already-symmetrized edge set.  Bounded-diameter graphs — the common
-    entity-equivalence shape — converge inside the budget and never pay
-    for star; a 100 TB run that unexpectedly grows a giant component
-    switches after at most ``auto_halving_budget`` cheap rounds.  Both
-    arms produce identical labels (min-id per component), so routing
-    never changes results — only which plan computes them (proven on
-    both shapes in tests/test_pipeline_scale.py).
+    'auto' (default) runs halving for at most ``auto_halving_budget``
+    rounds, bailing out early when the changed-label count decays slower
+    than ``auto_decay_threshold`` round-over-round (the long-chain
+    signature), then contracts and finishes the residue as the module
+    docstring describes.  Every path produces the same labels (min-id per
+    component), so routing never changes results — only which plan
+    computes them (tests/test_pipeline_scale.py, test_closure_finish.py).
     """
     if algorithm == "star":
         return connected_components_star(
@@ -70,10 +75,8 @@ def connected_components(
         raise ValueError(f"unknown closure algorithm: {algorithm!r}")
     fwd = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     sym = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-    # EAGER checkpoint: round 1's tagged relation unions TWO scans of
-    # sym inside one stage — with a lazy checkpoint each branch's tasks
-    # race to compute the deferred final stage per partition (the r16
-    # lazy-checkpoint boundary: lazy only for sequential consumers)
+    # eager: round 1 scans sym twice inside one stage, and a lazy
+    # checkpoint would let both branches race to compute it
     sym = sym.filter(F.col("src") != F.col("dst")).localCheckpoint()
 
     budget = min(auto_halving_budget, max_iter) if algorithm == "auto" else max_iter
@@ -82,53 +85,86 @@ def connected_components(
         budget,
         decay_threshold=(auto_decay_threshold if algorithm == "auto" else None),
     )
-    if not converged and algorithm == "auto":
-        # Keep the probe's work: contract the graph by the current labels
-        # before handing off to star.  label(u) is always a node of u's
-        # component (min over reachable labels, init self), so the
-        # quotient graph (label(u), label(v)) has exactly the original
-        # component structure — and after k probe rounds every already-
-        # converged component collapses to an edgeless single node (its
-        # edges become dropped self-loops) while chains shrink ~2^k-fold.
-        # Star then runs on the pathological residue alone, which is why
-        # auto beats BOTH manual choices on mixed shapes (SCALE.md r11)
-        # instead of paying probe + full-graph star.
-        lab_u = labels.select(
-            F.col("node").alias("_u"), F.col("component").alias("_cu")
-        )
-        lab_v = labels.select(
-            F.col("node").alias("_v"), F.col("component").alias("_cv")
-        )
-        contracted = (
-            sym.join(lab_u, sym.src == F.col("_u"))
-            .join(lab_v, sym.dst == F.col("_v"))
-            .select(F.col("_cu").alias("src"), F.col("_cv").alias("dst"))
-            .filter(F.col("src") != F.col("dst"))
-            .distinct()
-        )
-        star_stats: dict = {}
-        star_labels = connected_components_star(
-            contracted, src="src", dst="dst", max_iter=max_iter, stats=star_stats
-        ).select(
-            F.col("node").alias("_lab"), F.col("component").alias("_comp")
-        )
-        # components already converged in the probe never reach star
-        # (edgeless after contraction) — their probe label IS the answer
-        out = labels.join(
-            star_labels, labels.component == F.col("_lab"), "left"
-        ).select(
-            "node",
-            F.coalesce(F.col("_comp"), F.col("component")).alias("component"),
-        )
+    if converged or algorithm == "halving":
         if stats is not None:
-            stats["rounds"] = rounds + star_stats["rounds"]
-            stats["halving_rounds"] = rounds
-            stats["algorithm"] = "star"
-        return out
+            stats.update(rounds=rounds, algorithm="halving", residue_edges=0)
+        return labels
+
+    # contract: label(u) is always a node of u's component, so the
+    # quotient graph (label(u), label(v)) has the original component
+    # structure; probe-converged components become dropped self-loops
+    lab_u = labels.select(F.col("node").alias("_u"), F.col("component").alias("_cu"))
+    lab_v = labels.select(F.col("node").alias("_v"), F.col("component").alias("_cv"))
+    contracted = (
+        sym.join(lab_u, sym.src == F.col("_u"))
+        .join(lab_v, sym.dst == F.col("_v"))
+        .select(F.col("_cu").alias("src"), F.col("_cv").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+    residue = contracted.limit(DRIVER_FINISH_EDGES + 1).collect()
+    if len(residue) <= DRIVER_FINISH_EDGES:
+        roots = _driver_finish(contracted, residue)
+        finisher, finish_rounds = "driver", 1
+    else:
+        star_stats: dict = {}
+        roots = connected_components_star(
+            contracted, max_iter=max_iter, stats=star_stats
+        )
+        finisher, finish_rounds = "star", star_stats["rounds"]
+    roots = roots.select(F.col("node").alias("_lab"), F.col("component").alias("_comp"))
+    # probe-converged components never reach the finisher — their probe
+    # label IS the answer
+    out = labels.join(roots, labels.component == F.col("_lab"), "left").select(
+        "node", F.coalesce(F.col("_comp"), F.col("component")).alias("component")
+    )
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["algorithm"] = "halving"
-    return labels
+        stats.update(
+            rounds=rounds + finish_rounds,
+            halving_rounds=rounds,
+            algorithm=finisher,
+            residue_edges=(
+                len(residue) if finisher == "driver" else contracted.count()
+            ),
+        )
+    return out
+
+
+def _driver_finish(contracted: DataFrame, residue: list) -> DataFrame:
+    """(node, component) for a collected residue: union-find that always
+    links the larger root under the smaller, so each root is its
+    component's minimum id.  Python orders str by code point and ints
+    numerically — the same orders Spark's min uses (UTF-8 byte order is
+    code-point order).  The result is a local relation built from an Arrow
+    table: a list of tuples would plan as a Python-RDD scan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for u, v in residue:
+        parent.setdefault(u, u)
+        parent.setdefault(v, v)
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    key = contracted.schema["src"].dataType
+    schema = StructType([StructField("node", key, False), StructField("component", key, False)])
+    arrow_type = to_arrow_type(key)
+    table = pa.table({
+        "node": pa.array(list(parent), arrow_type),
+        "component": pa.array([find(n) for n in parent], arrow_type),
+    })
+    return contracted.sparkSession.createDataFrame(table, schema=schema)
 
 
 def _halving_loop(
@@ -151,13 +187,8 @@ def _halving_loop(
     prev_changed: int | None = None
     for _ in range(max_iter):
         rounds += 1
-        # Round 1 specialization (r15 opt): against the identity labeling
-        # the propagate join `sym ⋈ labels on src == node` is a no-op —
-        # every neighbor label IS the neighbor id — so the first round
-        # reads labels straight off the edge set (self rows appear once
-        # per incident edge; min/max aggregates are multiplicity-blind).
-        # This removes the labels-init checkpoint job AND round 1's
-        # join exchange (guide §2.4).
+        # round 1 reads labels straight off the edge set: against the
+        # identity labeling the propagate join is a no-op
         if labels is None:
             tagged = (
                 sym.select(
@@ -183,14 +214,8 @@ def _halving_loop(
             tagged = labels.select(
                 "node", "component", F.lit(True).alias("_self")
             ).union(prop.select("node", "component", F.lit(False).alias("_self")))
-        # the self rows are tagged so the round's OLD label rides through
-        # the min-aggregation as a second aggregate (a node's self rows
-        # all carry its current label, so the max-of-when is that label).
-        # Carrying it makes the convergence check below a filter-count
-        # over the already-checkpointed relation — the previous shape
-        # re-joined new vs old labels on node, a 2-exchange shuffle job
-        # per round that existed only to compute `changed` (r15 opt,
-        # guide §2.4: remove shuffles outright).
+        # self rows are tagged so each node's OLD label rides through the
+        # aggregation, making the convergence check a filter-count
         new_labels = (
             tagged.groupBy("node")
             .agg(
@@ -207,14 +232,8 @@ def _halving_loop(
         right = step.select(
             F.col("node").alias("_ptr_node"), F.col("component").alias("_ptr_comp")
         )
-        # lazy checkpoint + convergence count in ONE job (r16 opt): the
-        # eager form paid a dedicated result-stage job to cache the round's
-        # labels and then a second job to count changes over the cached
-        # blocks; the lazy form materializes the blocks inside the count's
-        # own job — same cached relation, one fewer job barrier per round.
-        # The count's filter is a narrow op over the checkpointed RDD, so
-        # its job computes (and caches) every partition — no partial-
-        # materialization hazard.
+        # lazy: the convergence count is the sole first consumer and
+        # materializes every partition inside its own job
         new_labels = (
             step.join(right, step.component == F.col("_ptr_node"), "left")
             .select(
@@ -295,13 +314,9 @@ def connected_components_star(
     where per-round label propagation degrades — and every round is the
     same bounded-fanout groupBy+join primitive, so no single key ever
     accumulates more than its current neighborhood."""
-    # new_e is lazily checkpointed (r16, same as the halving loop): its
-    # FIRST consumer is the exceptAll convergence job, which computes
-    # every partition sequentially before anything else reads it.  The
-    # INITIAL e stays eager — its first consumer is _large_star's
-    # two-branch union, whose branches scan e concurrently inside one
-    # stage (the r16 lazy-checkpoint boundary: lazy only for sequential
-    # consumers).
+    # eager here (_large_star's union scans e twice in one stage); each
+    # round's new_e is lazy, its first consumer being the sequential
+    # exceptAll convergence check
     e = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
@@ -319,7 +334,7 @@ def connected_components_star(
         if changed == 0:
             break
     if stats is not None:
-        stats["rounds"] = rounds
+        stats.update(rounds=rounds, algorithm="star")
     # converged: edges point children at their star root (v < u, v = root)
     sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (

@@ -12,7 +12,8 @@ restatement:
    crawl;
 3. run the ordinary full build on just those records (with the previous
    idmap as the stability input, so surviving components keep their
-   yuids);
+   yuids, and references to untouched components resolved through their
+   previous yuids);
 4. splice: previous merged output minus affected yuids, union the rebuilt
    slice.
 
@@ -249,9 +250,6 @@ def incremental_build(
     # so the checkpoint is cheap and truncates every downstream scan to
     # delta rows.
     slice_records = apply_changes_to_records(slice_prev, changes).localCheckpoint()
-    rebuilt = run_build(
-        spark, slice_records, indexes, idmap_prev, merge_order, delta_sized=True
-    )
 
     # every prev yuid in the blast must leave `untouched` — when two prev
     # components unite under one adopted yuid, the LOSING yuid's old row
@@ -261,9 +259,17 @@ def incremental_build(
             F.broadcast(blast.select(F.col("uri").alias("qua_uri")).distinct()),
             "qua_uri",
         ).select("yuid").distinct()
-        # same argument as blast: delta-sized, three consumers (both
-        # splice anti-joins + the touched manifest), corpus scan inside
+        # same argument as blast: delta-sized, four consumers (both
+        # splice anti-joins, idmap_outside, the touched manifest), corpus
+        # scan inside
         .localCheckpoint()
+    )
+    # untouched components' idmap rows: the slice resolves references to
+    # records outside it through these, exactly as a full rebuild would
+    idmap_outside = idmap_prev.join(F.broadcast(affected_yuids), "yuid", "left_anti")
+    rebuilt = run_build(
+        spark, slice_records, indexes, idmap_prev, merge_order, delta_sized=True,
+        idmap_outside=idmap_outside,
     )
     # the splice's only O(corpus) pass: one scan of prev_merged with two
     # broadcast (delta-sized) anti-joins — no corpus-sized exchange
@@ -275,9 +281,8 @@ def incremental_build(
     # entity twin folds on this): affected components' rows are replaced
     # wholesale by the rebuilt slice's idmap (creates appear, deletes
     # vanish with their records), untouched components' rows survive
-    rebuilt["idmap_full"] = (
-        idmap_prev.join(F.broadcast(affected_yuids), "yuid", "left_anti")
-        .unionByName(rebuilt["idmap"].select("qua_uri", "yuid"))
+    rebuilt["idmap_full"] = idmap_outside.unionByName(
+        rebuilt["idmap"].select("qua_uri", "yuid")
     )
     rebuilt["records"] = new_records
     # delta-layout outputs (streaming/entity_stream merge-on-read state):

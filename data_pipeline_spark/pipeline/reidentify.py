@@ -35,9 +35,13 @@ from pyspark.sql import functions as F
 _URI_RE = r'"(https?://[^"]+)"'
 
 
-def reidentify(records: DataFrame, idmap: DataFrame) -> DataFrame:
+def reidentify(records: DataFrame, idmap: DataFrame, delta_sized: bool = False) -> DataFrame:
     """records(source, identifier, rectype, data) + idmap(qua_uri, yuid)
     -> same rows with `data` rewritten and a `yuid` column attached.
+
+    ``delta_sized``: the records are a change-feed-sized slice resolved
+    against a corpus-sized idmap — broadcast their references so the
+    idmap is scanned, not shuffled.
 
     Record-key contract (ADVICE r15): identifiers are unique per source —
     the envelope model's primary key, which every upstream source mapper
@@ -61,6 +65,8 @@ def reidentify(records: DataFrame, idmap: DataFrame) -> DataFrame:
             )
         ).alias("uri"),
     )
+    if delta_sized:
+        refs = F.broadcast(refs)
     mapped = refs.join(idmap, refs.uri == idmap.qua_uri).select(
         "source", "identifier", "uri", "yuid"
     )

@@ -103,6 +103,14 @@ GATE_PIN = [
     "v09_ann_recall_eval",
     "d37_semantic_dedup",
     "b03_entity_facets_names",
+    # re-gate: the closure's new driver finish and the packed simhash aggregation
+    "j05_connected_components",
+    "j16_closure_auto_routed",
+    "d12_dedup_groups",
+    "d13_corpus_clean",
+    "d36_corpus_clean_tiered",
+    "d08_simhash_pairs",
+    "d34_simhash64_pairs",
 ]
 
 GATE_WINDOW_SIZE = 50
@@ -133,7 +141,10 @@ GATE_WINDOW_SIZE = 50
 # rj01 v06 v08 x01); with 16 pins and zero never-checked, 24 reserved
 # + remainder fill re-fronts the whole cohort plus the oldest r10s in
 # one round, keeping the ~5-round freshness invariant.
-AGE_SLOTS = 24
+# 17: every slot the 33 pins leave.  The local default test selection
+# (tests/conftest.py) still sweeps the LOCAL_AGE_SLOTS stalest greens.
+AGE_SLOTS = 17
+LOCAL_AGE_SLOTS = 24
 
 
 def driver_green_history() -> dict[str, int]:
@@ -196,6 +207,17 @@ def driver_green_history() -> dict[str, int]:
     return hist
 
 
+def stalest_greens(names: list[str], history: dict[str, int]) -> list[str]:
+    """Unpinned driver-green queries, stalest first (latest green round,
+    then declaration order)."""
+    decl = {n: i for i, n in enumerate(names)}
+    pins = set(GATE_PIN)
+    return sorted(
+        (n for n in names if n in history and n not in pins),
+        key=lambda n: (history[n], decl[n]),
+    )
+
+
 def compute_gate_window(
     names: list[str], history: dict[str, int], age_slots: int = AGE_SLOTS
 ) -> list[str]:
@@ -211,9 +233,7 @@ def compute_gate_window(
     pinned = [n for n in GATE_PIN if n in decl]
     pool = [n for n in names if n not in set(pinned)]
     never = sorted((n for n in pool if n not in history), key=lambda n: decl[n])
-    greens = sorted(
-        (n for n in pool if n in history), key=lambda n: (history[n], decl[n])
-    )
+    greens = stalest_greens(names, history)
     never_budget = max(0, GATE_WINDOW_SIZE - len(pinned) - age_slots)
     window = pinned + never[:never_budget] + greens[:age_slots]
     for n in never[never_budget:] + greens[age_slots:]:

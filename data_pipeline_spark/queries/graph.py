@@ -369,12 +369,12 @@ def j16_closure_auto_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round 11): 200-link chains through the DEFAULT algorithm — long
     enough that the budgeted halving probe cannot converge, so the gate
     exercises the full auto machinery: probe rounds, the label-CONTRACTED
-    handoff (quotient graph by probe labels), star on the residue, and
-    the join-back for probe-converged components.  j05 gates auto's
-    stay-on-halving arm (clique shape), j09 the star arm invoked
-    directly; this pins the routing + contraction composition against
-    the same recursive-CTE oracle style.  The switch is asserted
-    (stats['algorithm'] == 'star'), so the gate cannot silently degrade
+    handoff (quotient graph by probe labels), the driver finish of the
+    small residue, and the join-back for probe-converged components.
+    j05 gates auto's stay-on-halving arm (clique shape), j09 the star arm
+    invoked directly; this pins the routing + contraction composition
+    against the same recursive-CTE oracle style.  The switch is asserted
+    (stats['algorithm'] == 'driver'), so the gate cannot silently degrade
     into re-testing the halving arm if budgets change."""
     from pyspark.sql import Window as W
 
@@ -395,6 +395,6 @@ def j16_closure_auto_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit raise, not assert: under `python -O` an assert is stripped
     # and the gate silently degrades into a plain halving re-test — the
     # exact degradation this check exists to catch (ADVICE r11)
-    if stats["algorithm"] != "star":
+    if stats["algorithm"] != "driver":
         raise RuntimeError(f"auto did not switch on 200-link chains: {stats}")
     return out

@@ -25,12 +25,18 @@ def _driver_fast_names() -> frozenset[str]:
     (the 828-test/45-min suite was timing out there, leaving tests_ok
     unconfirmed)."""
     from data_pipeline_spark.queries import (
+        LOCAL_AGE_SLOTS,
         QUERIES,
         compute_gate_window,
         driver_green_history,
+        stalest_greens,
     )
 
-    window = compute_gate_window(list(QUERIES), driver_green_history())
+    hist = driver_green_history()
+    window = compute_gate_window(list(QUERIES), hist)
+    # pins shrink the driver window's stale-green share; the local sweep
+    # keeps its own, so a new pin never deselects a query's tests
+    window += stalest_greens(list(QUERIES), hist)[:LOCAL_AGE_SLOTS]
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(

@@ -102,3 +102,44 @@ def test_incremental_equals_full_rebuild(spark, setup):
     assert set(inc_rows) == set(full_rows)
     for y in full_rows:
         assert inc_rows[y] == full_rows[y], f"divergence at {y}"
+
+
+def test_incremental_resolves_references_outside_the_slice(spark, setup):
+    """A changed record that references an untouched group (member_of, not
+    an equivalence, so the group stays outside the blast radius) must
+    point at the group's yuid after the splice, exactly as a full rebuild
+    rewrites it — not keep the raw group URI."""
+    t, idx = setup
+    order = {"srcA": 0, "extX": 1, "extY": 2}
+    prev = run_build(spark, t["records"], idx, idmap_prev=t["idmap_prev"], merge_order=order)
+    prev_merged = prev["merged"].localCheckpoint()
+    prev_idmap = prev["idmap"].localCheckpoint()
+
+    person, group = uri("srcA", "anc1"), uri("srcA", "g1")
+    payload = json.dumps({
+        "id": person, "type": "Person", "_label": "Herodotus",
+        "member_of": [{"id": group, "type": "Group"}],
+    })
+    changes = spark.createDataFrame(
+        [(1, "2026-02-01 00:00:00", "update", person, payload)],
+        "seq bigint, end_time string, change string, object_uri string, payload string",
+    ).withColumn("end_time", F.col("end_time").cast("timestamp"))
+    assert group not in {
+        r.uri for r in affected_uris(changes, prev_idmap, idx).collect()
+    }
+
+    inc = incremental_build(
+        spark, t["records"], changes, idx,
+        idmap_prev=prev_idmap, prev_merged=prev_merged, merge_order=order,
+    )
+    inc_rows = {r.yuid: r.data for r in inc["merged_full"].collect()}
+    full = run_build(
+        spark, apply_changes_to_records(t["records"], changes), idx,
+        idmap_prev=prev_idmap, merge_order=order,
+    )
+    full_rows = {r.yuid: r.data for r in full["merged"].collect()}
+
+    group_yuid = prev_idmap.filter(F.col("qua_uri") == group).first().yuid
+    rebuilt = json.loads(inc_rows[prev_idmap.filter(F.col("qua_uri") == person).first().yuid])
+    assert [m["id"] for m in rebuilt["member_of"]] == [group_yuid]
+    assert inc_rows == full_rows

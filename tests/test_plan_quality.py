@@ -132,8 +132,8 @@ def test_closure_path_halving_round_count(spark):
 
 def test_closure_auto_routes_by_shape(spark):
     """algorithm='auto' (the default, VERDICT r10 #6): bounded-diameter
-    graphs converge inside the halving budget and never pay for star;
-    long chains trip the budget/decay trigger and re-route to star —
+    graphs converge inside the halving budget and stop there; long chains
+    trip the budget/decay trigger and finish their contracted residue —
     and BOTH arms return the same labels, so routing is invisible in
     results."""
     from data_pipeline_spark.pipeline.closure import connected_components
@@ -151,8 +151,9 @@ def test_closure_auto_routes_by_shape(spark):
     assert got == want
     assert stats["algorithm"] == "halving"
 
-    # pathological shape: one 120-node chain — auto must switch to star
-    # after at most the halving budget, and still label identically
+    # pathological shape: one 120-node chain — auto must hand the
+    # contracted residue to the driver finisher after at most the halving
+    # budget, and still label identically
     chain = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(119)], ["src", "dst"]
     )
@@ -162,7 +163,7 @@ def test_closure_auto_routes_by_shape(spark):
     want = {(r.node, r.component)
             for r in connected_components(chain, algorithm="halving").collect()}
     assert got == want
-    assert stats["algorithm"] == "star"
+    assert stats["algorithm"] == "driver"
     assert stats["halving_rounds"] <= 4  # the budgeted probe, not a full run
 
 

@@ -149,9 +149,11 @@ def main(sf_dir: str) -> None:
         reident.groupBy("yuid").count().agg(F.max("count")).collect()[0][0]
     )
     cc_stats: dict = {}
+    spark.sparkContext.setJobGroup("closure", "closure stats pass")
     connected_components(
         equiv_edges, src="src_uri", dst="dst_uri", stats=cc_stats
     ).count()
+    closure_jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup("closure"))
 
     total = round(sum(stages.values()), 1)
     canary_end = _spin()
@@ -163,8 +165,11 @@ def main(sf_dir: str) -> None:
         "ms_per_record": round(1000 * total / n_recs, 3),
         "closure_rounds": cc_stats.get("rounds"),
         # auto-routing (default algorithm='auto'): the benign pair shape
-        # must stay on halving — the probe budget is never exhausted
+        # must stay on halving — the probe budget is never exhausted;
+        # otherwise the finisher ("driver" or "star") and its residue
         "closure_routed_to": cc_stats.get("algorithm"),
+        "closure_residue_edges": cc_stats.get("residue_edges"),
+        "closure_jobs": closure_jobs,
         "max_merge_group": max_merge_group,
         "invariants_ok": (n_merged == n_cust and bad_sizes == 0),
         "n_equiv_edges": n_edges,

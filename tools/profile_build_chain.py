@@ -72,10 +72,16 @@ def main() -> None:
         )
         t0 = time.perf_counter()
         cc_stats: dict = {}
+        spark.sparkContext.setJobGroup(f"closure{p}", f"pass{p} closure")
         comps = connected_components(
             equiv_edges, src="src_uri", dst="dst_uri", stats=cc_stats
-        )
+        ).localCheckpoint()
+        comps.count()
         stages["closure"] = round(time.perf_counter() - t0, 3)
+        closure_jobs = len(
+            spark.sparkContext.statusTracker().getJobIdsForGroup(f"closure{p}")
+        )
+        spark.sparkContext.setJobGroup(f"pass{p}", f"pass{p}")
         t0 = time.perf_counter()
         labeled = comps.select(F.col("node").alias("uri"), "component")
         singles = (
@@ -115,7 +121,9 @@ def main() -> None:
         total = round(time.perf_counter() - t_all, 3)
         print(
             f"pass{p}: total={total} closure_rounds={cc_stats.get('rounds')} "
-            f"stages={stages}",
+            f"closure_finisher={cc_stats.get('algorithm')} "
+            f"residue_edges={cc_stats.get('residue_edges')} "
+            f"closure_jobs={closure_jobs} stages={stages}",
             flush=True,
         )
     spark.stop()
